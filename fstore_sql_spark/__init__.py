@@ -28,6 +28,7 @@ from fstore_sql_spark.errors import (
     UnregisteredEventError,
     DuplicateRegistrationError,
     DuplicateEventIdError,
+    NotNullViolationError,
 )
 
 __all__ = [
@@ -40,6 +41,7 @@ __all__ = [
     "UnregisteredEventError",
     "DuplicateRegistrationError",
     "DuplicateEventIdError",
+    "NotNullViolationError",
 ]
 
 __version__ = "0.1.0"

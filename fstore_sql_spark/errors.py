@@ -80,6 +80,19 @@ class ConcurrentCommitError(OptimisticLockError):
         )
 
 
+class NotNullViolationError(FStoreError):
+    """A NOT NULL column of ``events`` is still null after the engine's
+    defaults (reference schema.sql:27-54).  Checked after the T1–T3
+    triggers and before C1–C3, where Postgres checks it."""
+
+    def __init__(self, column: str):
+        super().__init__(
+            f'null value in column "{column}" of relation "events" '
+            "violates not-null constraint"
+        )
+        self.column = column
+
+
 class DuplicateEventIdError(FStoreError):
     """C1 — duplicate event_id (/root/reference/schema.sql:31-32)."""
 

@@ -19,13 +19,22 @@ schedule_nack_event    A9   EventStore.schedule_nack_event
 
 Design decisions (SURVEY.md §7):
 
-- **Set-based validation** (§2.3): the reference fires three plpgsql row
+- **Batch validation** (§2.3): the reference fires three plpgsql row
   triggers + three constraints per inserted row; we validate a whole batch
-  with semi/anti joins against the log snapshot plus window functions for
-  intra-batch chain checks — strictly better asymptotics for bulk appends.
+  at once, on one of two paths chosen by the input type.  A DataFrame
+  (streaming ingest, bulk loads) is validated set-based: semi/anti joins
+  against the log snapshot plus window functions for intra-batch chain
+  checks, folded by one aggregate — never collected.  A Python list
+  (``append_event``, Python producers) is already on the driver, so one
+  log probe fetches the touched streams' tails and the log rows whose
+  ``event_id``/``previous_id`` equals a batch key, and the same rules,
+  offsets and watermark aggregate are computed in Python — a handful of
+  Spark jobs per call instead of two dozen.  Both paths raise through one
+  rule order and one set of messages and share one commit tail.
 - **Offset assignment** (§7.4): appends are serialized through the single
   committer; ``offset = manifest.max_offset + row_number() OVER (ORDER BY
-  seq)``.  Unique, globally monotonic in commit order, per-stream ascending
+  seq, event_id)`` (the list path numbers the same order in Python).
+  Unique, globally monotonic in commit order, per-stream ascending
   — exactly BIGSERIAL minus rollback gaps (gaps are permitted; the
   reference's tests assert only monotonicity).
 - **Derive, don't dual-write** (§7.5): the ``locks`` table's high-watermark
@@ -43,6 +52,7 @@ from __future__ import annotations
 import threading
 import time
 import uuid as _uuid
+from collections import defaultdict, namedtuple
 from contextlib import contextmanager
 from datetime import datetime, timedelta, timezone
 
@@ -80,9 +90,92 @@ _PAYLOAD = "payload_schemas"
 # Default unlock instant: NOW() - 1ms (/root/reference/schema.sql:190-191).
 _UNLOCK_DELTA = timedelta(milliseconds=1)
 
+# Append candidates: the input columns after the engine's defaults, plus the
+# intra-batch order ``seq``.
+_CAND_COLS = (
+    "event", "event_id", "event_version", "decider", "decider_id", "data",
+    "command_id", "previous_id", "final", "seq",
+)
+_CAND_DDL = (
+    "event string, event_id string, event_version long, decider string, "
+    "decider_id string, data string, command_id string, previous_id string, "
+    "final boolean, seq long"
+)
+_Cand = namedtuple("_Cand", _CAND_COLS)
+# A numbered list batch before created_at (see _commit_rows).
+_ROWS_DDL = _CAND_DDL.replace(", seq long", ", offset long, transaction_id long")
+# The NOT NULL columns a caller supplies, in table order: Postgres checks
+# them in attribute order, so the first one null anywhere in the batch is
+# the one reported.  created_at, offset and transaction_id are the engine's.
+_NOT_NULL = tuple(
+    f.name for f in EVENTS_SCHEMA.fields if not f.nullable and f.name in _CAND_COLS
+)
+
 
 def _utcnow() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the block.  Appends hold ``_commit_lock``,
+    so two appends never interleave their settings; a concurrent reader
+    only sees a different plan, never a different result."""
+    conf = spark.conf
+    prev = conf.get(key)
+    conf.set(key, value)
+    try:
+        yield
+    finally:
+        conf.set(key, prev)
+
+
+def _stream_key(decider_id: str, decider: str) -> str:
+    """A stream's key in ``_probe_log``'s key relation."""
+    return f"\0{decider_id}\0{decider}"
+
+
+def _order_key(r: "_Cand"):
+    """Batch order ``(seq, event_id)``, a null event_id first as in Spark's
+    ascending sort."""
+    return (r.seq, r.event_id is not None, r.event_id or "")
+
+
+def _first_duplicate(values: list):
+    seen = set()
+    for x in values:
+        if x in seen:
+            return x
+        seen.add(x)
+    return None
+
+
+class _LogProbe:
+    """``EventStore._probe_log``'s rows, indexed for ``_check_rows``:
+    ``tails`` maps an existing stream (decider_id, decider) to its tail
+    (event_id, final); ``event_ids``/``previous_ids`` hold the probed log
+    rows' ids, ``stream_event_ids`` their (decider_id, decider, event_id);
+    ``registry`` the registered (decider, event, event_version)."""
+
+    def __init__(self, rows):
+        self.tails: dict = {}
+        self.event_ids: set = set()
+        self.previous_ids: set = set()
+        self.stream_event_ids: set = set()
+        self.registry: set = set()
+        for r in rows:
+            if r["kind"] == "t":
+                self.tails[(r["decider_id"], r["decider"])] = (r["event_id"], r["final"])
+            elif r["kind"] == "h":
+                if r["event_id"] is not None:
+                    self.event_ids.add(r["event_id"])
+                    self.stream_event_ids.add(
+                        (r["decider_id"], r["decider"], r["event_id"])
+                    )
+                if r["previous_id"] is not None:
+                    self.previous_ids.add(r["previous_id"])
+            else:
+                self.registry.add((r["decider"], r["event"], r["event_version"]))
 
 
 class EventStore:
@@ -857,10 +950,21 @@ class EventStore:
         appending intra-batch previous_id CHAINS from a DataFrame must
         supply ``seq`` explicitly.
 
-        Validation program (all set-based — SURVEY.md §2.3):
-          T1 stream-finalized, T2 first-event-null-previous,
-          T3 previous-id-in-same-decider, C1 event_id unique,
-          C2 previous_id unique (the optimistic lock), C3 registry FK.
+        Validation program (SURVEY.md §2.3), raised in the reference's
+        firing order: T1 stream-finalized, T2 first-event-null-previous,
+        T3 previous-id-in-same-decider, then NOT NULL, then C1 event_id
+        unique, C2 previous_id unique (the optimistic lock), C3 registry
+        FK.
+
+        The input type picks the path.  A DataFrame is validated and
+        numbered set-based (``_validate_batch``, ``_commit``) and never
+        collected, so bulk loads and streaming ingest scale with the
+        cluster.  A list is already on the driver: one ``_probe_log``
+        action fetches what the rules need from the log, and the rules,
+        offsets and the batch's watermark aggregate are computed in
+        Python (``_check_rows``, ``_commit_rows``).  Both paths raise
+        through ``_raise_violation`` and end in the same commit tail
+        (``_publish``).
 
         ``on_conflict="ignore"`` is the at-least-once recovery mode
         (ON CONFLICT DO NOTHING on the C1 key): candidates whose
@@ -873,42 +977,82 @@ class EventStore:
             raise ValueError(f"on_conflict must be 'error' or 'ignore': {on_conflict!r}")
         with self._commit_lock, self._committer_guard():
             now = _utcnow()
-            cand = self._as_candidates(rows_or_df)
-            if on_conflict == "ignore":
-                seen = self.events().select("event_id")
-                cand = cand.join(seen, "event_id", "leftanti")
-            cand = cand.persist()
-            prof = self.last_append_profile = {}
+            self.last_append_profile = {}
+            if isinstance(rows_or_df, DataFrame):
+                return self._append_frame(rows_or_df, validate, on_conflict, now)
+            return self._append_rows(rows_or_df, validate, on_conflict, now)
+
+    def _append_frame(
+        self, df: DataFrame, validate: bool, on_conflict: str, now: datetime
+    ) -> DataFrame:
+        """The DataFrame path of ``append_batch``: set-based throughout."""
+        cand = self._as_candidates(df)
+        if on_conflict == "ignore":
+            seen = self.events().select("event_id")
+            cand = cand.join(seen, "event_id", "leftanti")
+        cand = cand.persist()
+        prof = self.last_append_profile
+        _t = time.monotonic()
+        try:
+            n = cand.count()  # materialize the cache once, up front
+            prof["candidates_s"] = round(time.monotonic() - _t, 3)
+            if n == 0:
+                return self.events().limit(0)
+            with self._shuffle_sized_for(n):
+                _t = time.monotonic()
+                if validate:
+                    self._validate_batch(cand)
+                prof["validate_s"] = round(time.monotonic() - _t, 3)
+                manifest = self.storage.read_manifest(_EVENTS)
+                # T6: lock rows for partitions born in this batch
+                # (reference schema.sql:240-263).  Runs BEFORE the
+                # log append so its anti-join against the log evaluates
+                # on the pre-batch snapshot (post-commit the invalidated
+                # log cache would re-list and find every candidate stream
+                # "existing"; persisting doesn't help — unpersisting the
+                # log cache cascades to dependents).  Crash-safe: a
+                # seeded lock row is invisible through the derived
+                # locks() inner-join until the partition's events
+                # actually land, and last_offset=0 is exactly what T6
+                # would write on retry.
+                _t = time.monotonic()
+                self._t6_new_partition_locks(self._new_stream_keys(cand), now)
+                prof["t6_locks_s"] = round(time.monotonic() - _t, 3)
+                return self._commit(cand, manifest, now, n=n)
+        finally:
+            cand.unpersist()
+
+    def _append_rows(
+        self, rows, validate: bool, on_conflict: str, now: datetime
+    ) -> DataFrame:
+        """The list path of ``append_batch``: only ``_probe_log`` and the
+        commit tail's parquet write run Spark jobs."""
+        prof = self.last_append_profile
+        _t = time.monotonic()
+        cand = self._candidate_rows(rows)
+        prof["candidates_s"] = round(time.monotonic() - _t, 3)
+        if not cand:
+            return self.events().limit(0)
+        with self._shuffle_sized_for(len(cand)):
             _t = time.monotonic()
-            try:
-                n = cand.count()  # materialize the cache once, up front
-                prof["candidates_s"] = round(time.monotonic() - _t, 3)
-                if n == 0:
+            log = self._probe_log(cand)
+            if on_conflict == "ignore":
+                cand = [r for r in cand if r.event_id not in log.event_ids]
+                if not cand:
                     return self.events().limit(0)
-                with self._shuffle_sized_for(n):
-                    _t = time.monotonic()
-                    if validate:
-                        self._validate_batch(cand)
-                    prof["validate_s"] = round(time.monotonic() - _t, 3)
-                    manifest = self.storage.read_manifest(_EVENTS)
-                    # T6: lock rows for partitions born in this batch
-                    # (/root/reference/schema.sql:240-263).  Runs BEFORE
-                    # the log append so its anti-join against the log
-                    # evaluates on the pre-batch snapshot (post-commit the
-                    # invalidated log cache would re-list and find every
-                    # candidate stream "existing"; persisting doesn't help
-                    # — unpersisting the log cache cascades to dependents).
-                    # Crash-safe: a seeded lock row is invisible through
-                    # the derived locks() inner-join until the partition's
-                    # events actually land, and last_offset=0 is exactly
-                    # what T6 would write on retry.
-                    _t = time.monotonic()
-                    self._t6_new_partition_locks(self._new_stream_keys(cand), now)
-                    prof["t6_locks_s"] = round(time.monotonic() - _t, 3)
-                    appended = self._commit(cand, manifest, now, n=n)
-                return appended
-            finally:
-                cand.unpersist()
+            if validate:
+                self._raise_violation(*self._check_rows(cand, log))
+            prof["validate_s"] = round(time.monotonic() - _t, 3)
+            manifest = self.storage.read_manifest(_EVENTS)
+            # T6 from the probe's tails: a stream without one is born here
+            # (the pre-batch snapshot, as on the DataFrame path).
+            _t = time.monotonic()
+            new_ids = {
+                r.decider_id for r in cand if (r.decider_id, r.decider) not in log.tails
+            }
+            self._t6_new_partition_locks(new_ids, now)
+            prof["t6_locks_s"] = round(time.monotonic() - _t, 3)
+            return self._commit_rows(cand, manifest, now)
 
     # How long a blocked producer waits for a sibling process's append or
     # compaction to finish before raising TimeoutError.  Generous: an sf1
@@ -1020,17 +1164,13 @@ class EventStore:
         under the single-committer rule: appends are serialized by
         ``_commit_lock``; concurrent *readers* never depend on shuffle
         width for correctness."""
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.shuffle.partitions")
-        target = max(1, min(int(prev), n_rows // self.ROWS_PER_SHUFFLE_TASK + 1))
-        if target >= int(prev):
+        prev = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        target = max(1, min(prev, n_rows // self.ROWS_PER_SHUFFLE_TASK + 1))
+        if target >= prev:
             yield
             return
-        conf.set("spark.sql.shuffle.partitions", str(target))
-        try:
+        with _session_conf(self.spark, "spark.sql.shuffle.partitions", str(target)):
             yield
-        finally:
-            conf.set("spark.sql.shuffle.partitions", prev)
 
     def _as_candidates(self, rows_or_df) -> DataFrame:
         self._last_seq_was_hashed = False
@@ -1067,28 +1207,35 @@ class EventStore:
                 F.col("final").cast("boolean").alias("final"),
                 F.col("seq").cast("long").alias("seq"),
             )
-        prepared = []
-        for i, r in enumerate(rows_or_df):
-            prepared.append(
-                (
-                    r["event"],
-                    r["event_id"],
-                    int(r.get("event_version", 1)),
-                    r["decider"],
-                    r["decider_id"],
-                    r.get("data", "{}"),
-                    r.get("command_id") or str(_uuid.uuid4()),
-                    r.get("previous_id"),
-                    bool(r.get("final", False)),
-                    int(r.get("seq", i)),
-                )
+        return self.spark.createDataFrame(self._candidate_rows(rows_or_df), _CAND_DDL)
+
+    @staticmethod
+    def _candidate_rows(rows) -> "list[_Cand]":
+        """List input with the engine's defaults applied: a MISSING
+        ``event_version``/``data``/``final`` takes its column default, a
+        missing or null ``command_id`` a fresh UUID (``append_event``'s
+        contract), and ``seq`` defaults to list order.  An explicit None
+        stays null, as an explicit NULL does in an INSERT, and is rejected
+        by the NOT NULL check."""
+
+        def opt(cast, value):
+            return None if value is None else cast(value)
+
+        return [
+            _Cand(
+                r["event"],
+                r["event_id"],
+                opt(int, r.get("event_version", 1)),
+                r["decider"],
+                r["decider_id"],
+                r.get("data", "{}"),
+                r.get("command_id") or str(_uuid.uuid4()),
+                r.get("previous_id"),
+                opt(bool, r.get("final", False)),
+                int(r.get("seq", i)),
             )
-        return self.spark.createDataFrame(
-            prepared,
-            "event string, event_id string, event_version long, decider string, "
-            "decider_id string, data string, command_id string, previous_id string, "
-            "final boolean, seq long",
-        )
+            for i, r in enumerate(rows)
+        ]
 
     def _stream_tails(self, cand: DataFrame) -> DataFrame:
         """Per existing (decider_id, decider) stream touched by the batch:
@@ -1129,9 +1276,8 @@ class EventStore:
         (window counts for intra-batch uniqueness, left joins against
         column-pruned event scans for global uniqueness/predecessor
         checks), folded by a single aggregate — one Spark action for the
-        whole validation instead of one per rule.  Violations are raised
-        in the reference's trigger firing order (alphabetical trigger
-        names then constraints, SURVEY.md §3.1): T1, T2, T3, C1, C2, C3.
+        whole validation instead of one per rule.  ``_raise_violation``
+        raises the first violated rule.
         """
         # EMPTY-LOG FAST PATH (r14, guide §2.4 — remove shuffles outright):
         # the first bulk load into a fresh store (the 100 TB bootstrap
@@ -1247,17 +1393,52 @@ class EventStore:
             F.max(
                 F.when(c3, F.struct("decider", "event", "event_version"))
             ).alias("c3_row"),
+            # NOT NULL: index of the first _NOT_NULL column null anywhere
+            F.min(
+                F.coalesce(
+                    *[F.when(F.col(c).isNull(), F.lit(i)) for i, c in enumerate(_NOT_NULL)]
+                )
+            ).alias("null_col"),
         ).collect()[0]
 
+        def dup_event_id():
+            return cand.groupBy("event_id").count().filter(F.col("count") > 1).first()[
+                "event_id"
+            ]
+
+        def dup_previous_id():
+            return (
+                cand.filter(F.col("previous_id").isNotNull())
+                .groupBy("previous_id")
+                .count()
+                .filter(F.col("count") > 1)
+                .first()["previous_id"]
+            )
+
+        self._raise_violation(
+            v,
+            dup_event_id,
+            dup_previous_id,
+            seq_was_hashed=getattr(self, "_last_seq_was_hashed", False),
+        )
+
+    @staticmethod
+    def _raise_violation(v, dup_event_id, dup_previous_id, seq_was_hashed=False) -> None:
+        """Raise the first rule a batch violates, in the reference's firing
+        order (alphabetical trigger names, then NOT NULL, then the
+        constraints, SURVEY.md §3.1): T1, T2, T3, NOT NULL, C1, C2, C3.
+        ``v`` holds the folded flags of either validation path;
+        ``dup_event_id``/``dup_previous_id`` look up an offending in-batch
+        duplicate only when one is reported."""
         if v["t1"]:
             raise errors.StreamFinalizedError()
         if v["t2"]:
             raise errors.FirstEventError()
         if v["t3"]:
-            if v["t3_inbatch"] and getattr(self, "_last_seq_was_hashed", False):
+            if v["t3_inbatch"] and seq_was_hashed:
                 # the predecessor IS in the batch but deterministic hash
                 # order scrambled it after its successor — tell the caller
-                # the actual fix instead of a bare T3 (ADVICE r5)
+                # the actual fix instead of a bare T3
                 raise errors.PreviousIdError(
                     errors.PreviousIdError.MESSAGE
                     + " (an intra-batch previous_id chain was appended from "
@@ -1266,22 +1447,14 @@ class EventStore:
                     "column giving the intended intra-batch order)"
                 )
             raise errors.PreviousIdError()
+        if v["null_col"] is not None:
+            raise errors.NotNullViolationError(_NOT_NULL[v["null_col"]])
         if v["n_eid"] != v["n_eid_distinct"]:
-            dup = (
-                cand.groupBy("event_id").count().filter(F.col("count") > 1).first()
-            )
-            raise errors.DuplicateEventIdError(dup["event_id"])
+            raise errors.DuplicateEventIdError(dup_event_id())
         if v["c1_eid"] is not None:
             raise errors.DuplicateEventIdError(v["c1_eid"])
         if v["n_pid"] != v["n_pid_distinct"]:
-            dup = (
-                cand.filter(F.col("previous_id").isNotNull())
-                .groupBy("previous_id")
-                .count()
-                .filter(F.col("count") > 1)
-                .first()
-            )
-            raise errors.OptimisticLockError(dup["previous_id"])
+            raise errors.OptimisticLockError(dup_previous_id())
         if v["c2_pid"] is not None:
             raise errors.OptimisticLockError(v["c2_pid"])
         if v["c3_row"] is not None:
@@ -1289,6 +1462,130 @@ class EventStore:
             raise errors.UnregisteredEventError(
                 r["decider"], r["event"], r["event_version"]
             )
+
+    def _probe_log(self, cand: "list[_Cand]") -> "_LogProbe":
+        """Everything the list path needs from the log and the registry,
+        in one Spark action: the tails of the streams the batch touches,
+        the log rows whose ``event_id`` or ``previous_id`` equals a batch
+        key (an ``event_id`` or ``previous_id`` of the batch), and the
+        registry.
+
+        The keys travel as ONE small broadcast relation (a pandas frame,
+        so Arrow makes it a local relation and no Python worker starts),
+        joined three times; Spark reuses the one broadcast.  Stream keys
+        are encoded as ``\\0decider_id\\0decider`` in the same relation;
+        a stray match between the two kinds only adds rows, which
+        ``_LogProbe`` never looks up.  Never ``Column.isin`` over per-key
+        literals: building 10k literal columns over py4j costs seconds."""
+        reg = self.deciders().select(
+            "decider", "event", "event_version", F.lit("r").alias("kind")
+        )
+        # Empty-log fast path, the manifest proof of _validate_batch: a log
+        # that never committed a row has no tails and no key matches.
+        if self.storage.read_manifest(_EVENTS).max_offset == 0:
+            return _LogProbe(reg.collect())
+        ids = {r.event_id for r in cand} | {r.previous_id for r in cand}
+        ids.discard(None)
+        streams = {
+            _stream_key(r.decider_id, r.decider)
+            for r in cand
+            if r.decider_id is not None and r.decider is not None
+        }
+        keys = F.broadcast(
+            self.spark.createDataFrame(
+                pd.DataFrame({"k": [*ids, *streams]}, dtype=object),
+                "k string",
+            )
+        )
+        ev = self.events()
+        sk = F.concat(F.lit("\0"), "decider_id", F.lit("\0"), "decider")
+        tails = (
+            ev.join(keys, sk == keys["k"], "leftsemi")
+            .groupBy("decider_id", "decider")
+            .agg(
+                F.max_by("event_id", "offset").alias("event_id"),
+                F.max_by("final", "offset").alias("final"),
+            )
+            .withColumn("kind", F.lit("t"))
+        )
+        cols = ["decider_id", "decider", "event_id", "previous_id"]
+        hits = (
+            ev.join(keys, ev["event_id"] == keys["k"], "leftsemi")
+            .select(*cols)
+            .unionByName(
+                ev.join(keys, ev["previous_id"] == keys["k"], "leftsemi").select(*cols)
+            )
+            .withColumn("kind", F.lit("h"))
+        )
+        probe = tails.unionByName(hits, allowMissingColumns=True).unionByName(
+            reg, allowMissingColumns=True
+        )
+        # Adaptive execution would re-plan around every exchange, one job
+        # each, to tune a plan whose inputs are a local key relation and
+        # the cached log: off for this one action (2 jobs instead of 3,
+        # and 2 instead of 6 right after a commit dropped the log cache).
+        with _session_conf(self.spark, "spark.sql.adaptive.enabled", "false"):
+            return _LogProbe(probe.collect())
+
+    @staticmethod
+    def _check_rows(cand: "list[_Cand]", log: "_LogProbe"):
+        """``_validate_batch``'s program for a list batch, evaluated in
+        Python with the same SQL semantics: the same per-row flags (a null
+        join key matches nothing; one flag row per matching in-batch
+        predecessor, as the left join fans out), folded the same way.
+        Returns ``_raise_violation``'s arguments."""
+        by_stream = defaultdict(list)
+        for r in sorted(cand, key=_order_key):
+            by_stream[(r.decider_id, r.decider)].append(r)
+        earlier = defaultdict(list)
+        for r in cand:
+            if r.decider_id is not None and r.decider is not None and r.event_id is not None:
+                earlier[(r.decider_id, r.decider, r.event_id)].append(r.seq)
+        v = dict.fromkeys(("t1", "t2", "t3", "t3_inbatch"), False)
+        c1, c2, c3 = [], [], []
+        for key, rows in by_stream.items():
+            tail = log.tails.get(key)
+            for rn, r in enumerate(rows, 1):
+                if rn == 1:
+                    v["t1"] |= bool(tail and tail[1])
+                else:
+                    v["t1"] |= bool(rows[rn - 2].final)
+                pid = r.previous_id
+                if pid is None:
+                    v["t2"] |= rn > 1 or (tail is not None and tail[0] is not None)
+                else:
+                    in_log = (
+                        None not in key and (*key, pid) in log.stream_event_ids
+                    )
+                    for ps in earlier.get((r.decider_id, r.decider, pid), [None]):
+                        bad = not (in_log or (ps is not None and ps < r.seq))
+                        v["t3"] |= bad
+                        v["t3_inbatch"] |= bad and ps is not None
+                    if pid in log.previous_ids:
+                        c2.append(pid)
+                if r.event_id in log.event_ids:
+                    c1.append(r.event_id)
+                if (r.decider, r.event, r.event_version) not in log.registry:
+                    c3.append((r.decider, r.event, r.event_version))
+        v["null_col"] = next(
+            (i for i, c in enumerate(_NOT_NULL) if any(getattr(r, c) is None for r in cand)),
+            None,
+        )
+        eids = [r.event_id for r in cand if r.event_id is not None]
+        pids = [r.previous_id for r in cand if r.previous_id is not None]
+        v.update(
+            n_eid=len(eids),
+            n_eid_distinct=len(set(eids)),
+            n_pid=len(pids),
+            n_pid_distinct=len(set(pids)),
+            c1_eid=max(c1, default=None),
+            c2_pid=max(c2, default=None),
+            # struct ordering: a null field sorts first
+            c3_row=max(c3, key=lambda t: [(x is not None, x) for x in t], default=None),
+        )
+        if v["c3_row"] is not None:
+            v["c3_row"] = dict(zip(("decider", "event", "event_version"), v["c3_row"]))
+        return v, lambda: _first_duplicate(eids), lambda: _first_duplicate(pids)
 
     # Batches above this many rows use the parallel two-phase numbering;
     # below it, a plain global-window row_number (one small single-task
@@ -1340,7 +1637,8 @@ class EventStore:
     def _commit(
         self, cand: DataFrame, manifest: Manifest, now: datetime, n: int | None = None
     ) -> DataFrame:
-        """Assign offsets + commit metadata, append to the log.  Appends
+        """The DataFrame path's numbering: assign offsets + commit
+        metadata set-based, then ``_publish``.  Appends
         are serialized through the committer (single-writer, SURVEY.md
         §7.5), so ``base_offset`` is exact and the result is gap-free."""
         txn = manifest.commit_id + 1
@@ -1393,59 +1691,106 @@ class EventStore:
                     .set_index("decider_id")
                 )
             prof["hwm_merge_s"] = round(time.monotonic() - _t, 3)
-            # Compare-and-swap gate (VERDICT r4 #1, defense in depth under
-            # the committer flock): if the on-disk manifest moved since this
-            # append read it, a second committer raced us past the lock —
-            # abort LOUDLY before allocating colliding offsets.  Nothing has
-            # been written yet, so the batch can simply be retried.
-            disk = self.storage.read_manifest(_EVENTS)
-            if disk.commit_id != manifest.commit_id:
-                raise errors.ConcurrentCommitError(manifest.commit_id, disk.commit_id)
-            # Crash-atomicity: advance the manifest BEFORE the log append.
-            # A crash between the two then yields only an offset gap (which
-            # BIGSERIAL permits — rollback gaps, SURVEY.md §7.4), never
-            # duplicate offsets: rows are visible in the log only after a
-            # completed append (Spark's parquet committer stages task files
-            # in _temporary until job commit), and the next committer reads
-            # the already-advanced max_offset.  The reference gets this
-            # from the Postgres transaction; manifest-first is the
-            # log-shipping equivalent.
-            # pending_rows rides the allocation (ADVICE r5 medium): if we
-            # die before the marker publish, recovery can verify whether
-            # the batch's files landed COMPLETELY instead of assuming so.
-            self.storage.write_manifest(
-                _EVENTS,
-                Manifest(
-                    max_offset=manifest.max_offset + n,
-                    commit_id=txn,
-                    pending_rows=n,
-                ),
-            )
-            _t = time.monotonic()
-            self.storage.append_log(_EVENTS, finished, cluster_by="decider_id")
-            prof["parquet_write_s"] = round(time.monotonic() - _t, 3)
-            _t = time.monotonic()
-            # VISIBILITY marker: written only after the append completed,
-            # so sibling processes' _refresh_external never rebuilds from
-            # a log missing this batch (ADVICE r2, high).
-            self.storage.write_published(_EVENTS, txn)
-            prof["marker_publish_s"] = round(time.monotonic() - _t, 3)
-            self._invalidate_log_cache()
-            self._seen_commit_id = txn
-            self._seen_log_gen = self.storage._log_gen(_EVENTS)
-            self._rebind_sql_views()
-            if batch_hwm is not None:
-                _t = time.monotonic()
-                self._hwm_shards.merge_batch(
-                    batch_hwm, prev_commit=manifest.commit_id, new_commit=txn
-                )
-                prof["hwm_merge_s"] = round(
-                    prof.get("hwm_merge_s", 0.0) + time.monotonic() - _t, 3
-                )
+            return self._publish(finished, manifest, n, batch_hwm)
         finally:
             finished.unpersist()
             if pinned is not None:
                 pinned.unpersist()
+
+    def _commit_rows(
+        self, cand: "list[_Cand]", manifest: Manifest, now: datetime
+    ) -> DataFrame:
+        """``_commit`` for a list batch: offsets in ``(seq, event_id)``
+        order and the batch's watermark aggregate are computed in Python,
+        and the numbered rows reach Spark as one local relation."""
+        prof = self.last_append_profile
+        _t = time.monotonic()
+        n = len(cand)
+        base = manifest.max_offset
+        pdf = pd.DataFrame(sorted(cand, key=_order_key), columns=_CAND_COLS)
+        pdf = pdf.drop(columns="seq")
+        pdf["offset"] = range(base + 1, base + n + 1)
+        pdf["transaction_id"] = manifest.commit_id + 1
+        finished = (
+            self.spark.createDataFrame(pdf, _ROWS_DDL)
+            .withColumn("created_at", F.lit(now))
+            .select([f.name for f in EVENTS_SCHEMA.fields])
+        )
+        prof["offset_number_s"] = round(time.monotonic() - _t, 3)
+        _t = time.monotonic()
+        batch_hwm = None  # skipped as in _commit
+        if self._hwm_shards.is_active() or self._hwm_shards._read_meta() is not None:
+            # offsets ascend, so a stream's last row holds its max offset
+            batch_hwm = (
+                pdf.drop_duplicates("decider_id", keep="last")
+                .set_index("decider_id")[["offset", "final"]]
+                .rename(columns={"final": "offset_final"})
+            )
+        prof["hwm_merge_s"] = round(time.monotonic() - _t, 3)
+        return self._publish(finished, manifest, n, batch_hwm)
+
+    def _publish(
+        self,
+        finished: DataFrame,
+        manifest: Manifest,
+        n: int,
+        batch_hwm: "pd.DataFrame | None",
+    ) -> DataFrame:
+        """The commit tail both append paths share: manifest CAS →
+        manifest-first allocation with ``pending_rows`` → log append →
+        ``_PUBLISHED`` marker → cache invalidation → watermark merge.
+        Returns the RETURNING * view of the batch."""
+        prof = self.last_append_profile
+        txn = manifest.commit_id + 1
+        # Compare-and-swap gate (defense in depth under the committer
+        # flock): if the on-disk manifest moved since this
+        # append read it, a second committer raced us past the lock —
+        # abort LOUDLY before allocating colliding offsets.  Nothing has
+        # been written yet, so the batch can simply be retried.
+        disk = self.storage.read_manifest(_EVENTS)
+        if disk.commit_id != manifest.commit_id:
+            raise errors.ConcurrentCommitError(manifest.commit_id, disk.commit_id)
+        # Crash-atomicity: advance the manifest BEFORE the log append.
+        # A crash between the two then yields only an offset gap (which
+        # BIGSERIAL permits — rollback gaps, SURVEY.md §7.4), never
+        # duplicate offsets: rows are visible in the log only after a
+        # completed append (Spark's parquet committer stages task files
+        # in _temporary until job commit), and the next committer reads
+        # the already-advanced max_offset.  The reference gets this
+        # from the Postgres transaction; manifest-first is the
+        # log-shipping equivalent.
+        # pending_rows rides the allocation: if we die before the
+        # marker publish, recovery can verify whether
+        # the batch's files landed COMPLETELY instead of assuming so.
+        self.storage.write_manifest(
+            _EVENTS,
+            Manifest(
+                max_offset=manifest.max_offset + n,
+                commit_id=txn,
+                pending_rows=n,
+            ),
+        )
+        _t = time.monotonic()
+        self.storage.append_log(_EVENTS, finished, cluster_by="decider_id")
+        prof["parquet_write_s"] = round(time.monotonic() - _t, 3)
+        _t = time.monotonic()
+        # VISIBILITY marker: written only after the append completed,
+        # so sibling processes' _refresh_external never rebuilds from
+        # a log missing this batch.
+        self.storage.write_published(_EVENTS, txn)
+        prof["marker_publish_s"] = round(time.monotonic() - _t, 3)
+        self._invalidate_log_cache()
+        self._seen_commit_id = txn
+        self._seen_log_gen = self.storage._log_gen(_EVENTS)
+        self._rebind_sql_views()
+        if batch_hwm is not None:
+            _t = time.monotonic()
+            self._hwm_shards.merge_batch(
+                batch_hwm, prev_commit=manifest.commit_id, new_commit=txn
+            )
+            prof["hwm_merge_s"] = round(
+                prof.get("hwm_merge_s", 0.0) + time.monotonic() - _t, 3
+            )
         # RETURNING * analogue — a lazy offset-range view of the committed
         # log (never collects the batch to the driver; 100 TB-clean).
         lo, hi = manifest.max_offset + 1, manifest.max_offset + n
@@ -1453,22 +1798,30 @@ class EventStore:
             (F.col("offset") >= lo) & (F.col("offset") <= hi)
         )
 
-    def _t6_new_partition_locks(self, new_streams: DataFrame, now: datetime) -> None:
+    def _t6_new_partition_locks(
+        self, new_streams: "DataFrame | set[str]", now: datetime
+    ) -> None:
         """T6 insert branch (/root/reference/schema.sql:244-252): one lock
         row per registered view for each partition born in this batch, with
         ``last_offset = 0`` and unlocked lease.  The update branch
         (refresh of offset/offset_final) is derived at read time instead
         (SURVEY.md §7.5).  Collects only the DISTINCT new-stream keys (not
         event rows) into the driver-side ledger — bounded by the batch's
-        new-partition count, the same cardinality the reference INSERTs."""
+        new-partition count, the same cardinality the reference INSERTs.
+        ``new_streams`` is the DataFrame path's new-stream keys or the list
+        path's set of new decider_ids."""
         # Fast path: most appends extend existing streams — skip the locks
         # state write entirely when the batch opened no new partitions.
-        if new_streams.first() is None:
+        is_df = isinstance(new_streams, DataFrame)
+        if (new_streams.first() is None) if is_df else not new_streams:
             return
         views_pdf = self.views().select("view").toPandas()
         if views_pdf.empty:  # no consumers registered — T6 is a no-op
             return
-        ids = new_streams.select("decider_id").distinct().toPandas()
+        if is_df:
+            ids = new_streams.select("decider_id").distinct().toPandas()
+        else:
+            ids = pd.DataFrame({"decider_id": list(new_streams)}, dtype=object)
         rows = views_pdf.merge(ids, how="cross")
         rows["last_offset"] = 0
         rows["locked_until"] = pd.Timestamp(now - _UNLOCK_DELTA)

@@ -10,6 +10,7 @@ from fstore_sql_spark import (
     DuplicateEventIdError,
     DuplicateRegistrationError,
     FirstEventError,
+    NotNullViolationError,
     OptimisticLockError,
     PreviousIdError,
     StreamFinalizedError,
@@ -578,3 +579,231 @@ def test_empty_log_fast_path_validation_parity(store):
                 }
             ]
         )
+
+
+# ---------------------------------------------------------------------- #
+# List path vs DataFrame path: one rule program, two evaluations
+# ---------------------------------------------------------------------- #
+
+_FRAME_DDL = (
+    "event string, event_id string, event_version long, decider string, "
+    "decider_id string, data string, command_id string, previous_id string, "
+    "final boolean, seq long"
+)
+
+
+def _ev(event_id, decider_id, previous_id=None, **kw):
+    """One append row on decider ``d``; command_id is derived from the
+    event_id so both paths commit identical rows."""
+    row = {
+        "event": "e",
+        "event_id": event_id,
+        "decider": "d",
+        "decider_id": decider_id,
+        "command_id": f"c-{event_id}",
+        "previous_id": previous_id,
+    }
+    row.update(kw)
+    return row
+
+
+def _as_frame(spark, rows):
+    """The same batch as a DataFrame with explicit ``seq`` (list order) and
+    the list path's defaults for missing keys; explicit Nones stay null."""
+    return spark.createDataFrame(
+        [
+            (
+                r["event"],
+                r["event_id"],
+                r.get("event_version", 1),
+                r["decider"],
+                r["decider_id"],
+                r.get("data", "{}"),
+                r["command_id"],
+                r.get("previous_id"),
+                r.get("final", False),
+                i,
+            )
+            for i, r in enumerate(rows)
+        ],
+        _FRAME_DDL,
+    )
+
+
+# (batch, append_batch kwargs, expected exception or None), run in order on
+# one fresh store.  The first block keeps the log empty (the empty-log fast
+# path of both validators); the rest runs against log probes.
+_RULE_STEPS = [
+    # C1 intra-batch duplicate event_id (two fresh streams: no T-rule fires)
+    ([_ev("dup", "s1"), _ev("dup", "s2")], {}, DuplicateEventIdError),
+    # T3: dangling previous_id
+    ([_ev("a", "s1", "nope")], {}, PreviousIdError),
+    # T2: second event of a new stream in one batch with null previous_id
+    ([_ev("a", "s1"), _ev("b", "s1")], {}, FirstEventError),
+    # C3: unregistered event type
+    ([_ev("a", "s1", event="nope")], {}, UnregisteredEventError),
+    # NOT NULL, one column at a time
+    ([_ev("a", "s1", data=None)], {}, NotNullViolationError),
+    ([_ev(None, "s1")], {}, NotNullViolationError),
+    ([_ev("a", None)], {}, NotNullViolationError),
+    # NOT NULL fires before C1 and C3 (column order: event_id before data)
+    (
+        [_ev("x", "s1", event="nope", data=None), _ev("x", "s2", event_version=None)],
+        {},
+        NotNullViolationError,
+    ),
+    # …and after the triggers
+    ([_ev("a", "s1", data=None), _ev("b", "s1")], {}, FirstEventError),
+    # in-batch chain, committed
+    (
+        [_ev("c0", "c")] + [_ev(f"c{i}", "c", f"c{i - 1}") for i in range(1, 5)],
+        {},
+        None,
+    ),
+    ([_ev("e1", "s1")], {}, None),
+    # C1 against the log
+    ([_ev("e1", "s2")], {}, DuplicateEventIdError),
+    # T2 against the log's tail
+    ([_ev("t2", "s1")], {}, FirstEventError),
+    ([_ev("f1", "s2")], {}, None),
+    # T3: predecessor in another stream
+    ([_ev("t3", "s2", "e1")], {}, PreviousIdError),
+    ([_ev("e2", "s1", "e1")], {}, None),
+    # C2 against the log: the stale previous_id (optimistic lock)
+    ([_ev("stale", "s1", "e1")], {}, OptimisticLockError),
+    # C2 inside the batch
+    ([_ev("x1", "s1", "e2"), _ev("x2", "s1", "e2")], {}, OptimisticLockError),
+    # in-batch chain out of seq order
+    ([_ev("y2", "s1", "y1"), _ev("y1", "s1", "e2")], {}, PreviousIdError),
+    # NOT NULL before C2 on a probed log
+    ([_ev("z", "s1", "e1", data=None)], {}, NotNullViolationError),
+    ([_ev("e3", "s1", "e2", final=True)], {}, None),
+    # T1 against the log's final tail, then inside one batch
+    ([_ev("t1", "s1", "e3")], {}, StreamFinalizedError),
+    (
+        [_ev("g1", "s3"), _ev("g2", "s3", "g1", final=True), _ev("g3", "s3", "g2")],
+        {},
+        StreamFinalizedError,
+    ),
+    # C3: registered type, wrong version
+    ([_ev("v2", "s4", event_version=2)], {}, UnregisteredEventError),
+    # on_conflict="ignore": replay appends the missing suffix, a full
+    # replay is a no-op, strict mode still rejects the duplicate
+    ([_ev("h1", "s5"), _ev("h2", "s5", "h1")], {}, None),
+    (
+        [_ev("h1", "s5"), _ev("h2", "s5", "h1"), _ev("h3", "s5", "h2")],
+        {"on_conflict": "ignore"},
+        None,
+    ),
+    (
+        [_ev("h1", "s5"), _ev("h2", "s5", "h1"), _ev("h3", "s5", "h2")],
+        {"on_conflict": "ignore"},
+        None,
+    ),
+    ([_ev("h2", "s5", "h1")], {}, DuplicateEventIdError),
+]
+
+
+def _run_rule_steps(store, to_input):
+    """Each step's outcome: the exception class and message, or the
+    committed rows without created_at."""
+    store.register_decider_event("d", "e", "x")
+    outcomes = []
+    for rows, kwargs, _ in _RULE_STEPS:
+        try:
+            out = store.append_batch(to_input(rows), **kwargs).drop("created_at")
+            outcomes.append(sorted(tuple(r) for r in out.collect()))
+        except Exception as e:  # the outcome under test
+            outcomes.append((type(e), str(e)))
+    return outcomes
+
+
+def test_list_and_dataframe_paths_agree_on_every_rule(spark):
+    """The list path (driver-side rules against one log probe) and the
+    DataFrame path (set-based rules) raise the same exception class and
+    message, or commit the same rows, for T1–T3, NOT NULL, C1–C3,
+    in-batch duplicates and chains, and the on_conflict="ignore" replay."""
+    import shutil
+    import tempfile
+
+    from fstore_sql_spark import EventStore
+
+    results = {}
+    for name, to_input in (("list", list), ("frame", lambda rows: _as_frame(spark, rows))):
+        path = tempfile.mkdtemp(prefix=f"fstore_parity_{name}_")
+        try:
+            results[name] = _run_rule_steps(EventStore(spark, path), to_input)
+        finally:
+            shutil.rmtree(path, ignore_errors=True)
+    for i, (step, lst, frm) in enumerate(zip(_RULE_STEPS, results["list"], results["frame"])):
+        expected = step[2]
+        if expected is None:
+            assert isinstance(lst, list), (i, lst)
+        else:
+            assert lst[0] is expected, (i, lst)
+        assert lst == frm, (i, lst, frm)
+    # the replay appended exactly the missing suffix, then nothing
+    assert [r[1] for r in results["list"][-3]] == ["h3"]
+    assert results["list"][-2] == []
+
+
+def test_not_null_columns_rejected_with_postgres_text(store):
+    """A NOT NULL column still null after the defaults is rejected with
+    Postgres's message for the first such column, and nothing is written."""
+    store.register_decider_event("d", "e", "x")
+    for col in ("event_id", "decider_id", "data"):
+        row = _ev("n1", "s1")
+        row[col] = None
+        with pytest.raises(
+            NotNullViolationError,
+            match=f'null value in column "{col}" of relation "events" '
+            "violates not-null constraint",
+        ):
+            store.append_batch([row])
+    with pytest.raises(NotNullViolationError, match='"data"'):
+        store.append_event("e", uid(), "d", "s1", data=None)
+    assert store.events().count() == 0
+
+
+def _count_spark_jobs(spark, fn):
+    """Spark jobs run by ``fn`` (job group + status tracker); an exception
+    ``fn`` raises is returned, not raised."""
+    sc = spark.sparkContext
+    group = f"jobs-{uid()}"
+    sc.setJobGroup(group, group)
+    err = None
+    try:
+        fn()
+    except Exception as e:  # the caller asserts on it
+        err = e
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), err
+
+
+def test_append_event_spark_jobs_pinned(store, spark):
+    """One extending append_event on a warm store with a registered view
+    costs 4 Spark jobs (2 for the log probe, 2 for the parquet write; it
+    was 24 when the list path validated set-based), and a stale
+    previous_id is rejected by the probe alone.  Pinned so the count
+    cannot silently grow back."""
+    store.register_decider_event("d", "e", "x")
+    store.append_batch(
+        [_ev(f"p{i}-0", f"p{i}") for i in range(3)]
+        + [_ev(f"p{i}-1", f"p{i}", f"p{i}-0") for i in range(3)]
+    )
+    store.register_view("v", start_at="2020-01-01 00:00:00")
+    store.stream_events("v", limit=1)  # the watermark is live
+    # a command replays the stream first, which warms the log cache
+    last = store.get_events("p0", "d").collect()[-1]["event_id"]
+    jobs, err = _count_spark_jobs(
+        spark, lambda: store.append_event("e", "p0-2", "d", "p0", previous_id=last)
+    )
+    assert err is None and jobs == 4, (jobs, err)
+    store.get_events("p0", "d").collect()
+    jobs, err = _count_spark_jobs(
+        spark, lambda: store.append_event("e", uid(), "d", "p0", previous_id=last)
+    )
+    assert isinstance(err, OptimisticLockError)
+    assert jobs <= 3, jobs
